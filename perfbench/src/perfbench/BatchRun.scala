@@ -3,13 +3,21 @@ package perfbench
 import org.apache.spark.sql.SparkSession
 
 /** The batch workload: one client runs the query mix in a closed loop
-  * through `SparkEntry.queries`, each pass in a seed-permuted order.
+  * through `SparkEntry.queries`, in an order the seed permutes.
   *
-  * Before the clock starts, one check pass runs every query once and
-  * writes its result as parquet for the DuckDB oracle compare (untimed; it
-  * also warms the JIT, the index caches and the footer memos). The timed
-  * passes then materialize each query with a noop-format write, as
-  * `graft.Bench` does, until the run's time is up.
+  * Before the clock starts, two untimed passes run every query once: a
+  * cold check pass that writes each result as parquet for the DuckDB
+  * oracle compare, then a warm-up pass exactly like a timed one (together
+  * they take class loading, the JIT's first compilations, the index caches
+  * and the footer memos). The timed passes then materialize each query
+  * with a noop-format write, as `graft.Bench` does, until the run's time
+  * is up and at least one whole pass has run.
+  *
+  * Every pass of a run uses the same order, so each one meets the same
+  * code-generator cache history: Spark's cache of compiled generated code
+  * holds 100 entries, fewer than one pass over the mix produces, and with
+  * a new order per pass its hit rate, and so the pass time, changed with
+  * the order.
   */
 object BatchRun {
 
@@ -64,16 +72,18 @@ object BatchRun {
     mine ++ failed
   }
 
-  def timedPasses(spark: SparkSession, names: Seq[String], dataDir: String,
-      seed: Long, seconds: Int): Seq[Exec] = {
-    val deadline = Tracer.nowMs() + seconds * 1000.0
+  /** Runs passes over the mix until `deadline` or `maxPasses` passes. A
+    * query that starts before the deadline runs to its end, and the first
+    * pass always runs to its end, so every query has a time. */
+  def passes(spark: SparkSession, names: Seq[String], dataDir: String,
+      seed: Long, deadline: Double, maxPasses: Int = Int.MaxValue): Seq[Exec] = {
     val execs = Vector.newBuilder[Exec]
+    val order = new scala.util.Random(seed).shuffle(names)
     var pass = 0
     var running = true
-    while (running) {
-      val order = new scala.util.Random(seed * 1000003L + pass).shuffle(names)
+    while (running && pass < maxPasses) {
       order.foreach { name =>
-        if (running && Tracer.nowMs() < deadline) {
+        if (running && (pass == 0 || Tracer.nowMs() < deadline)) {
           spark.catalog.clearCache()
           val t0 = Tracer.nowMs()
           var t1 = t0

@@ -69,16 +69,42 @@ object LiveRun {
     }
   }
 
-  /** One set-up round's serving work: bring the stack up, take the
-    * initial snapshot frames over a WebSocket, bring it down. */
-  def setupRound(): Unit = {
+  /** Starts the whole `StreamMain` graph on a 1 s trigger over the drop-dir. */
+  def startGraph(spark: SparkSession, kv: KvStore, drop: String,
+      ckpt: String): Seq[StreamingQuery] = {
+    val derived = s"$ckpt/derived-kpis"
+    Files.createDirectories(Paths.get(derived))
+    val trigger = Trigger.ProcessingTime("1 second")
+    val source = () => Jobs.fileEventStream(spark, drop)
+    Jobs.transactionsJob(source, kv, ckpt, trigger) ++
+      Jobs.infrastructureJob(source, kv, ckpt, trigger) ++
+      Jobs.derivedJob(source, kv, ckpt, trigger) ++
+      Seq(Jobs.kpiRelayJob(source, derived, ckpt, trigger),
+        Jobs.alertsJob(() => Jobs.fileKpiStream(spark, derived), kv, ckpt, trigger))
+  }
+
+  /** One set-up round: bring the serving stack up, take the initial
+    * snapshot frames over a WebSocket, start every query of the graph over
+    * an empty drop-dir (each `start` returns once its stream thread runs),
+    * then bring it all down. The round does not wait for the first
+    * trigger: with no data its time is scheduling (1-9 s over three
+    * rounds), not work. */
+  def setupRound(spark: SparkSession, dir: String): Unit = {
     val stack = new Stack(None)
+    var queries: Seq[StreamingQuery] = Nil
     try {
       val got = new java.util.concurrent.CountDownLatch(Api.ChannelToEvent.size)
       val c = new WsClient(stack.ws.port, _ => got.countDown())
       got.await(10, java.util.concurrent.TimeUnit.SECONDS)
       c.close()
-    } finally stack.close()
+      val drop = Paths.get(dir, "drop")
+      Files.createDirectories(drop)
+      queries = startGraph(spark, stack.jobsKv, drop.toString, s"$dir/ckpt")
+      if (!queries.forall(_.isActive)) sys.error("set-up round: a query of the graph did not start")
+    } finally {
+      queries.foreach(q => try q.stop() catch { case _: Exception => () })
+      stack.close()
+    }
   }
 
   private def consumed(probes: Probes): Map[String, Long] =
@@ -106,9 +132,7 @@ object LiveRun {
     val live = files.slice(cfg.backlogFiles, cfg.backlogFiles + cfg.liveFiles)
     val drop = Paths.get(cfg.workDir, "drop")
     val ckpt = Paths.get(cfg.workDir, "ckpt").toString
-    val derived = s"$ckpt/derived-kpis"
     Files.createDirectories(drop)
-    Files.createDirectories(Paths.get(derived))
     def release(f: StagedFile): Unit =
       Files.move(Paths.get(cfg.stageDir, f.name), drop.resolve(f.name),
         StandardCopyOption.ATOMIC_MOVE)
@@ -120,14 +144,8 @@ object LiveRun {
       // ---- phase 1: catch-up over the pre-staged backlog
       backlog.foreach(release)
       val backlogEvents = backlog.map(_.n.toLong).sum
-      val trigger = Trigger.ProcessingTime("1 second")
-      val source = () => Jobs.fileEventStream(spark, drop.toString)
       val c0 = Tracer.nowMs()
-      queries = Jobs.transactionsJob(source, stack.jobsKv, ckpt, trigger) ++
-        Jobs.infrastructureJob(source, stack.jobsKv, ckpt, trigger) ++
-        Jobs.derivedJob(source, stack.jobsKv, ckpt, trigger) ++
-        Seq(Jobs.kpiRelayJob(source, derived, ckpt, trigger),
-          Jobs.alertsJob(() => Jobs.fileKpiStream(spark, derived), stack.jobsKv, ckpt, trigger))
+      queries = startGraph(spark, stack.jobsKv, drop.toString, ckpt)
       val buildMs = (Tracer.nowMs() - c0) / queries.length
       // events each query has read = rows / its scan multiplicity, once known
       val mult = scala.collection.mutable.Map.empty[String, Int]
@@ -151,6 +169,13 @@ object LiveRun {
           .getOrElse(Tracer.nowMs())
       }.max
       if (!caughtUp) notes += "catch-up did not finish within 120 s"
+      // held memory once the backlog is in the state stores and the KV
+      // store: the least of three readings, each taken while no query runs
+      // a trigger, so a batch in flight does not count
+      val retained = (1 to 3).map { _ =>
+        waitFor(5000)(queries.forall(!_.status.isTriggerActive))
+        Main.retainedMb()
+      }.min
 
       // ---- phase 2: live, open loop
       val liveFirstId = live.headOption.map(_.firstId).getOrElse(Long.MaxValue)
@@ -227,7 +252,8 @@ object LiveRun {
       val e2e = Map(
         "pass_s" -> catchupS,
         "latency_ms_p50" -> Stats.pctOr(panel, 50, Double.NaN),
-        "latency_ms_p75" -> Stats.pctOr(panel, 75, Double.NaN))
+        "latency_ms_p75" -> Stats.pctOr(panel, 75, Double.NaN),
+        "retained_mb" -> retained)
       val human = Map(
         "catchup_eps" -> backlogEvents / catchupS,
         "freshness_ms_p50" -> Stats.pctOr(fr, 50, Double.NaN),
@@ -238,7 +264,7 @@ object LiveRun {
         "api_ms_p99" -> Stats.pctOr(api, 99, Double.NaN),
         "freshness_samples" -> fr.length.toDouble, "api_samples" -> api.length.toDouble,
         "live_s" -> (liveEnd - t0) / 1000.0, "drain_s" -> (drainEnd - liveEnd) / 1000.0,
-        "checks_s" -> checksS)
+        "checks_s" -> checksS, "first_timed_ms" -> c0)
       Stats.tail(panel).foreach(t => notes += f"panel freshness tail: p${t.percentile}%.1f = ${t.value}%.1f ms over ${t.samples} samples")
       Stats.tail(fr).foreach(t => notes += f"freshness tail: p${t.percentile}%.1f = ${t.value}%.1f ms over ${t.samples} samples")
       Stats.tail(api).foreach(t => notes += f"api tail: p${t.percentile}%.1f = ${t.value}%.1f ms over ${t.samples} samples")
