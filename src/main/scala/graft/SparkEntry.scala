@@ -181,7 +181,8 @@ object SparkEntry {
     "top_orders" ->
       """SELECT o_orderkey,
         |  epoch(o_orderdate)::BIGINT AS o_epoch,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        |  round(sum(l_extendedprice::DECIMAL(15,2)
+        |    * (1 - l_discount::DECIMAL(15,2))), 2)::DOUBLE AS revenue
         |FROM customer
         |JOIN orders ON c_custkey = o_custkey
         |JOIN lineitem ON o_orderkey = l_orderkey

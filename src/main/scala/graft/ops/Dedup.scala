@@ -26,13 +26,9 @@ object Dedup {
   /** 60-bit integer from an md5 hex prefix — the shared hash family. */
   private[ops] val md5i = "cast(conv(substring(md5(%s), 1, 15), 16, 10) as bigint)"
 
-  /** [[Par.fan]]: spread the corpus over the session's cores before the
-    * CPU-heavy tokenize/explode passes — guarded on the input's scan
-    * parallelism, so it is a no-op (no added Exchange) on a wide
-    * production scan and only fixes the single-file fixture pathology.
-    * Batch entry points only: the streaming micro-batch sketch path
-    * keeps its arrival partitioning. */
-  private def fan(df: DataFrame): DataFrame = Par.fan(df)
+  // Batch entry points spread the corpus with [[Par.fan]] before the
+  // CPU-heavy tokenize/explode passes; the streaming micro-batch sketch
+  // path keeps its arrival partitioning.
 
   /** Exact-dup corpus: planted exact duplicates (case-folded) 1-in-20. */
   def exactCorpus(documents: DataFrame): DataFrame =
@@ -157,7 +153,7 @@ object Dedup {
     * alert_rules pattern). At cluster scale this is the sketch table you
     * would checkpoint/bucket to storage between stages. */
   private def stagedSigs(corpus: DataFrame): DataFrame =
-    minhashSignatures(fan(corpus)).select("doc_id", "sig").transform(Par.stage)
+    minhashSignatures(Par.fan(corpus)).select("doc_id", "sig").transform(Par.stage)
 
   /** Pairs-only candidate path for consumers that never read
     * `est_jaccard` ([[dupClusters]], [[dupClustersStar]], [[dedupApply]],
@@ -254,7 +250,7 @@ object Dedup {
     * duplicates against the standing corpus.
     */
   def minhashIncremental(corpus: DataFrame, newFrom: Long = 10000L): DataFrame = {
-    val sigs = minhashSignatures(fan(corpus)).select("doc_id", "sig")
+    val sigs = minhashSignatures(Par.fan(corpus)).select("doc_id", "sig")
       .persist() // lazy on purpose: eager measured 1.21 -> 1.89 s here
     bandProbe(sigs, bands(sigs), newFrom)
   }
@@ -298,7 +294,7 @@ object Dedup {
     * near-dup pipeline): |A∩B| / |A∪B| on distinct shingle sets.
     */
   def ngramJaccard(corpus: DataFrame): DataFrame = {
-    val sh = shingleSets(fan(corpus))
+    val sh = shingleSets(Par.fan(corpus))
       .select(col("doc_id"), col("shingles").as("sh"))
       .persist() // lazy on purpose: eager measured 2.49 -> 2.78 s here
     val cands = candidatePairs(corpus)
@@ -327,7 +323,7 @@ object Dedup {
     // Hash BEFORE the distinct: the dedup shuffle then carries 8-byte longs
     // rather than bigram strings (same result — equal bigrams hash equal;
     // 2^60 collisions negligible).
-    val hashed = fan(corpus)
+    val hashed = Par.fan(corpus)
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), col("toks"), posexplode(col("toks")))
@@ -408,7 +404,7 @@ object Dedup {
     // grows geometrically with rounds and OOMs the driver long before the
     // data does. Checkpointing truncates lineage so every round's plan is
     // one join + one agg, constant-size. Storage policy via [[Par.stage]]:
-    // reliable `.checkpoint()` when `spark.graft.checkpointDir` is set
+    // a reliable checkpoint when `spark.graft.checkpointDir` is set
     // (the cluster shape — executor loss cannot kill the job), eager
     // executor-local blocks otherwise.
     // Checkpoint the CANDIDATES before the symmetric closure: both union
@@ -537,7 +533,7 @@ object Dedup {
     */
   def duplicateSpans(corpus: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val grams = fan(corpus)
+    val grams = Par.fan(corpus)
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= SpanGram)
       .select(col("doc_id"), col("toks"), posexplode(col("toks")))

@@ -266,10 +266,9 @@ object Quantize {
     * so the in-query incremental search and the persisted-index append
     * query ([[IvfPqIndex]]) fold in the SAME batch and can share one
     * oracle unroll. Returns (vec_id, v). */
-  private[graft] def plantedDelta(embeddings: DataFrame,
-      idShift: Long = DeltaBase): DataFrame =
+  private[graft] def plantedDelta(embeddings: DataFrame): DataFrame =
     embeddings.filter(pmod(col("vec_id"), lit(50)) === 0)
-      .select((col("vec_id") + idShift).as("vec_id"),
+      .select((col("vec_id") + DeltaBase).as("vec_id"),
         expr("transform(cast(embedding as array<double>), (x, i) -> x + ((i % 7) - 3) / 1000d)")
           .as("v"))
 

@@ -42,7 +42,9 @@ object Tpch {
 
   /** Top unshipped-revenue orders (TPC-H Q3 shape): selective dimension
     * filter, two joins, top-k. `customer` filtered before the join so only
-    * the matching segment shuffles.
+    * the matching segment shuffles. Revenue sums in DECIMAL(15,2) inputs
+    * and rounds the exact sum to cents: a double sum depends on summation
+    * order and can land on either side of a half cent.
     */
   def topOrders(customer: DataFrame, orders: DataFrame, lineitem: DataFrame): DataFrame =
     customer
@@ -53,8 +55,9 @@ object Tpch {
       .join(lineitem.filter(col("l_shipdate") > lit("1996-01-01")),
         col("o_orderkey") === col("l_orderkey"))
       .groupBy(col("o_orderkey"), col("o_orderdate"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-        .as("revenue"))
+      .agg(round(sum(col("l_extendedprice").cast("decimal(15,2)") *
+          (lit(1) - col("l_discount").cast("decimal(15,2)"))), 2)
+        .cast("double").as("revenue"))
       // Parquet timestamps load as TIMESTAMP_NTZ in Spark 4, and NTZ→BIGINT
       // is not a valid cast; route through LTZ (session tz is pinned UTC, so
       // this matches the oracle's epoch()::BIGINT exactly).

@@ -690,22 +690,20 @@ object AvroCodec {
 
   // -------------------------------------------------------------- queries
 
-  /** Fan the wire-codec pipeline across the session's cores and compute
-    * it ONCE. Two measured local[32] pathologies share this fix (profiled
-    * at sf0.1, r17): the fixture parquet is a single small file, so the
-    * scan plans ONE task and the per-row encode+decode (the dominant
-    * cost, ~2 s per 100 k rows) serializes on one core; and the final
-    * global `orderBy`'s range-partitioner SAMPLING pass re-runs the
-    * whole pipeline a second time. `fan` ([[graft.ops.Par.fan]])
-    * round-robins the narrow RAW rows over `defaultParallelism` before
-    * the codec runs — GUARDED on the input's scan parallelism, so a wide
-    * production scan passes through with no added Exchange and only the
-    * single-file fixture narrows get spread — and `once` persists the decoded
-    * projection so the sort samples a materialized result instead of
-    * re-decoding. Bench clears the cache between runs, so every timed
-    * run still pays the full decode exactly once. */
-  private def fan(df: DataFrame): DataFrame = graft.ops.Par.fan(df)
-  private def once(df: DataFrame): DataFrame = df.persist()
+  // The wire-codec queries below fan across the session's cores and
+  // compute ONCE. Two measured local[32] pathologies share this fix
+  // (profiled at sf0.1, r17): the fixture parquet is a single small file,
+  // so the scan plans ONE task and the per-row encode+decode (the
+  // dominant cost, ~2 s per 100 k rows) serializes on one core; and the
+  // final global `orderBy`'s range-partitioner SAMPLING pass re-runs the
+  // whole pipeline a second time. [[graft.ops.Par.fan]] round-robins the
+  // narrow RAW rows over `defaultParallelism` before the codec runs —
+  // GUARDED on the input's scan parallelism, so a wide production scan
+  // passes through with no added Exchange and only the single-file
+  // fixture narrows get spread — and `.persist()` on the decoded
+  // projection lets the sort sample a materialized result instead of
+  // re-decoding. Bench clears the cache between runs, so every timed
+  // run still pays the full decode exactly once.
 
   /** S3 closed end-to-end in-plan: synthesize request_log records from the
     * events fixture, serialize each through the Avro wire format, plant a
@@ -740,7 +738,7 @@ object AvroCodec {
   }
 
   def avroRoundtrip(events: DataFrame): DataFrame = {
-    once(fan(events)
+    graft.ops.Par.fan(events)
       .select(col("event_id"), requestLogRec.as("rec"))
       .select(col("event_id"), expr("to_avro_graft(rec, 'request_log')").as("bin"))
       .select(col("event_id"),
@@ -758,7 +756,7 @@ object AvroCodec {
         col("d.region_name").as("region_name"),
         col("d.user_display_name").as("user_display_name"),
         col("d.platform").as("platform"),
-        unix_millis(col("d.created_at")).as("created_ms")))
+        unix_millis(col("d.created_at")).as("created_ms")).persist()
       .orderBy(col("event_id"))
   }
 
@@ -797,7 +795,7 @@ object AvroCodec {
     * exercising PERMISSIVE through the resolved path. The oracle computes
     * the evolved view directly from `events`. */
   def avroEvolution(events: DataFrame): DataFrame = {
-    once(fan(events)
+    graft.ops.Par.fan(events)
       .select(col("event_id"), requestLogRec.as("rec"))
       .select(col("event_id"), expr("to_avro_graft(rec, 'request_log')").as("bin"))
       .select(col("event_id"),
@@ -814,7 +812,7 @@ object AvroCodec {
         col("d.latency_ms").as("latency_ms"),
         col("d.user_id").as("user_id"),
         col("d.trace_id").as("trace_id"),
-        unix_millis(col("d.created_at")).as("created_ms")))
+        unix_millis(col("d.created_at")).as("created_ms")).persist()
       .orderBy(col("event_id"))
   }
 
@@ -862,7 +860,7 @@ object AvroCodec {
     * handling, the ZonedTimestamp string round-trip, and the metadata
     * tail all decode exactly. */
   def cdcAvroDecode(orders: DataFrame): DataFrame = {
-    once(fan(orders)
+    graft.ops.Par.fan(orders)
       .select(col("o_orderkey"), ordersCdcRec.as("rec"))
       .select(col("o_orderkey"), expr("to_avro_graft(rec, 'orders_cdc')").as("bin"))
       .select(
@@ -879,7 +877,7 @@ object AvroCodec {
         col("d.user_display_name").as("user_display_name"),
         col("d.platform").as("platform"),
         substring(col("d.created_at"), 1, 10).as("created_day"),
-        col("d.__source_ts_ms").as("src_ms")))
+        col("d.__source_ts_ms").as("src_ms")).persist()
       .orderBy(col("id"))
   }
 
@@ -926,7 +924,7 @@ object AvroCodec {
     * truncated for the PERMISSIVE channel, decoded, deleted-filtered, and
     * every surviving column recomputed by the oracle from `events`. */
   def cdcSessionsDecode(events: DataFrame): DataFrame = {
-    once(fan(events)
+    graft.ops.Par.fan(events)
       .select(col("event_id"), sessionsCdcRec.as("rec"))
       .select(col("event_id"), expr("to_avro_graft(rec, 'sessions_cdc')").as("bin"))
       .select(col("event_id"),
@@ -945,7 +943,7 @@ object AvroCodec {
         col("d.region_name").as("region_name"),
         col("d.is_active").as("is_active"),
         col("d.__op").as("op"),
-        col("d.__source_ts_ms").as("src_ms")))
+        col("d.__source_ts_ms").as("src_ms")).persist()
       .orderBy(col("event_id"))
   }
 

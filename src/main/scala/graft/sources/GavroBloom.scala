@@ -68,7 +68,7 @@ object GavroBloom {
     * probability collapses geometrically with the list:
     * P(exclude) = (1−fp)^|IN| ≈ e^(−|IN|·fp). At this sizing's ~0.8%
     * fp that is ~0.6 at 64 values and ~0.0003 at the 1024 push cap —
-    * measured at the cap (SCALESMOKE_r17 `bloom_plan_cost`): 8378 of
+    * measured at the cap (round 17, PROGRESS.md `bloom_plan_cost`): 8378 of
     * 8378 blocks admitted, every one through a false positive, after
     * ~100 ms of hash passes. Past this bound the proof is declined:
     * it cannot win often enough to pay for its own O(values × blocks)

@@ -121,12 +121,11 @@ object Jobs {
             .map(r => s"""{"id":"${r.getAs[String]("ruleId")}","status":"${r.getAs[String]("status")}","consecutive":${r.getAs[Int]("consecutive")},"updatedAt":${r.getAs[Long]("updatedAt")}}""")
           kv.writeJson(Keys.AlertRules, payload.mkString("[", ",", "]"),
             channel = Some(Keys.ChannelAlerts))
-          // Reference-shaped summary (alert_evaluator.py:28-36) — the same
-          // schema KvSink.alertWriter writes to this key, so readers via
-          // Serve.getAlertSummary see one contract regardless of which
-          // writer ran last. Severity comes from the rule config by ruleId;
-          // healthy is the machine's quiescent state only (its "normal"
-          // plays the reference's status == 'ok').
+          // Reference-shaped summary (alert_evaluator.py:28-36), the one
+          // contract readers see via Serve.getAlertSummary; this job is
+          // the key's only writer. Severity comes from the rule config by
+          // ruleId; healthy is the machine's quiescent state only (its
+          // "normal" plays the reference's status == 'ok').
           val sevById = graft.ops.Alerts.rules.map(r => r.id -> r.severity).toMap
           val unhealthy = rows.filter(_.getAs[String]("status") != "normal")
           def bySev(s: String) = unhealthy.count(r =>

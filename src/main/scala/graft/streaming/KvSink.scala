@@ -214,26 +214,6 @@ object KvSink {
         channel = Some(Keys.ChannelPlatform))
   }
 
-  /** A10: alert rules + summary writer (reference: alert_evaluator.py:21-38). */
-  def alertWriter(kv: KvStore): (DataFrame, Long) => Unit = (batch, _) => {
-    val rows = batch.collect()
-    if (rows.nonEmpty) {
-      kv.writeJson(Keys.AlertRules, rows.map(rowJson).mkString("[", ",", "]"),
-        channel = Some(Keys.ChannelAlerts))
-      val critical = rows.count(r =>
-        r.getAs[String]("severity") == "critical" && r.getAs[String]("status") != "ok")
-      val warning = rows.count(r =>
-        r.getAs[String]("severity") == "warning" && r.getAs[String]("status") != "ok")
-      val healthy = rows.count(r => r.getAs[String]("status") == "ok")
-      kv.writeHash(Keys.AlertSummary, Map(
-        "criticalCount" -> critical.toString,
-        "warningCount" -> warning.toString,
-        "healthyCount" -> healthy.toString,
-        "criticalImpact" -> "Currently affecting 0% of users",
-        "updatedAt" -> rows.map(_.getAs[Long]("updatedAt")).max.toString))
-    }
-  }
-
   /** T4: the flow arcs — regions of the latest window ranked by intensity;
     * ranked[0] is the hub, ranked[1..5] become arcs into it
     * (reference: region_aggregator.py:53-65). Returns the JSON payload, and

@@ -1295,6 +1295,93 @@ class GavroSourceSpec extends SparkSpec {
       Set("x.gavro", "y.gavro"))
   }
 
+  test("optimize under a concurrently committing writer loses no record") {
+    val out = tmpDir("optwriter")
+    val events = Tables.events(spark, dir)
+    Gavro.write(events.repartition(16)
+      .select(AvroCodec.requestLogRec.as("rec"))
+      .select(expr("to_avro_graft(rec, 'request_log')").as("bin")), out)
+    val total = events.count()
+    // One tiny, valid request_log file per writer commit. Its footer makes
+    // it optimize-eligible, so a commit that lands before the merge lists
+    // the table may be absorbed into the merged output: the accounting is
+    // at record grain, not file names.
+    val names = new java.util.concurrent.atomic.AtomicInteger(0)
+    val landed = new java.util.concurrent.atomic.AtomicInteger(0)
+    def landTinyFile(): Unit = {
+      val i = names.getAndIncrement()
+      val name = f"traffic-$i%05d.gavro"
+      val vals: Array[Any] = Array(1000000000L + i,
+        UTF8String.fromString("/api/traffic"), UTF8String.fromString("GET"),
+        200, 1, 1L, UTF8String.fromString("s"), UTF8String.fromString("r"),
+        UTF8String.fromString("u"), UTF8String.fromString("web"),
+        1000000L * i)
+      val b = AvroCodec.encode(AvroCodec.RequestLog, vals(_), _ => false)
+      val os = new java.io.FileOutputStream(new java.io.File(out, name))
+      try {
+        os.write(Array[Byte]((b.length >>> 24).toByte, (b.length >>> 16).toByte,
+          (b.length >>> 8).toByte, b.length.toByte))
+        os.write(b)
+        graft.sources.GavroFooter.write(os, Seq(0L), Seq.empty)
+      } finally os.close()
+      Gavro.commitBatch(out, Seq(name))
+      landed.incrementAndGet()
+      ()
+    }
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val writerErr =
+      new java.util.concurrent.atomic.AtomicReference[Throwable](null)
+    val writer = new Thread(() => {
+      try while (!stop.get()) {
+        landTinyFile()
+        Thread.sleep(2)
+      } catch { case t: Throwable => writerErr.set(t) }
+    })
+    writer.start()
+    // the writer is live before the merge lists the table
+    while (landed.get() < 3 && writerErr.get() == null) Thread.sleep(5)
+    // The writer thread's timing alone cannot promise a commit between the
+    // merge's listing and its swap. Optimize touches its lock after each
+    // merged bin, which is inside that window, so a coordination store
+    // that lands one commit on the first lock touch always hits the race.
+    val inWindow = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val fs = graft.sources.LocalFsStore
+    val racing = new graft.sources.GavroStore {
+      def putIfAbsent(dst: java.io.File, content: String): Unit =
+        fs.putIfAbsent(dst, content)
+      def atomicReplace(dst: java.io.File, content: String): Unit =
+        fs.atomicReplace(dst, content)
+      def publishIfAbsent(staged: java.io.File, dst: java.io.File): Boolean =
+        fs.publishIfAbsent(staged, dst)
+      def createMarkerIfAbsent(dst: java.io.File): Unit =
+        fs.createMarkerIfAbsent(dst)
+      def touch(f: java.io.File): Unit = {
+        fs.touch(f)
+        if (f.getName == "_optimize.lock" && inWindow.compareAndSet(false, true))
+          landTinyFile()
+      }
+      def mtime(f: java.io.File): Long = fs.mtime(f)
+      def list(dir: java.io.File): Seq[java.io.File] = fs.list(dir)
+      def delete(f: java.io.File): Boolean = fs.delete(f)
+      def exists(f: java.io.File): Boolean = fs.exists(f)
+      def length(f: java.io.File): Long = fs.length(f)
+      def read(f: java.io.File): Seq[String] = fs.read(f)
+    }
+    val pre = landed.get()
+    try Gavro.withStores(racing, graft.sources.LocalFsDataStore) {
+      assert(Gavro.optimize(out).nonEmpty)
+    } finally { stop.set(true); writer.join() }
+    // a silently-dead writer would make the zero-loss check vacuous
+    assert(writerErr.get() == null, s"writer thread died: ${writerErr.get()}")
+    assert(inWindow.get(), "no commit landed between the listing and the swap")
+    assert(landed.get() > pre)
+    // zero loss, record-exact: every base row and every traffic row once
+    val scanned = spark.read.format("gavro")
+      .option("schema", "request_log").load(out).count()
+    assert(scanned == total + landed.get(),
+      s"post-swap scan $scanned != $total + ${landed.get()}")
+  }
+
   test("optimize edge cases: empty log dir and single-file dir are no-ops") {
     val out = tmpDir("optimize_empty")
     new java.io.File(out, Gavro.CommitsDir).mkdirs()
@@ -2523,7 +2610,7 @@ class GavroSourceSpec extends SparkSpec {
     // GavroBloom.InProofMax the proof can essentially never win and the
     // reader declines it rather than paying O(values × blocks) hashing
     // for nothing (measured at the 1024 cap: 8378/8378 blocks admitted,
-    // all via false positives — SCALESMOKE_r17 bloom_plan_cost).
+    // all via false positives — round 17, PROGRESS.md bloom_plan_cost).
     val events = Tables.events(spark, dir)
     val out = tmpDir("bloombound")
     Gavro.write(events.select(AvroCodec.requestLogRec.as("rec"))

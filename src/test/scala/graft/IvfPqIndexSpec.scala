@@ -136,6 +136,19 @@ class IvfPqIndexSpec extends SparkSpec {
     assert(appended.exists(_._3 >= Quantize.DeltaBase))
   }
 
+  test("re-rank search over an appended index: top-5 per query, appended ids surface") {
+    // The re-rank stage joins full-precision vectors by id, so the corpus
+    // frame must carry the appended vectors too, or their ids drop out.
+    val dir = IvfPqIndex.ensureAppended(spark, sfDir)
+    val corpus = emb.unionByName(Quantize.plantedDelta(emb)
+      .select(col("vec_id"), expr("cast(v as array<float>)").as("embedding"),
+        lit(-1).as("label")))
+    val rows = IvfPqIndex.searchIndex(spark, dir, corpus).collect()
+    assert(rows.length == IvfPqIndex.SearchQueries * 5)
+    assert(rows.exists(_.getAs[Long]("vec_id") >= Quantize.DeltaBase),
+      "no appended vector surfaced in any top-k")
+  }
+
   test("appends then OPTIMIZE compact the codes table losslessly, stats-pruning intact") {
     // The full maintenance cycle a long-lived index lives through:
     // nightly build, two daily frozen fold-ins (small appended files),

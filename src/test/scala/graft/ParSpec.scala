@@ -16,6 +16,8 @@ import graft.ops.Par
   *     unset → eager localCheckpoint (executor-local, the sandbox shape);
   *     set → RELIABLE `checkpoint()` into that directory (survives
   *     executor loss — the cluster shape). Rows identical either way.
+  *     No other main source file calls a Dataset checkpoint, so this is
+  *     the one place that chooses checkpoint storage.
   */
 class ParSpec extends SparkSpec {
 
@@ -69,5 +71,27 @@ class ParSpec extends SparkSpec {
       }
       rm(dir)
     }
+  }
+
+  test("no main source outside Par.scala calls a Dataset checkpoint") {
+    // `Gavro.checkpoint(dir)` is the gavro commit-log API, not a Dataset
+    // checkpoint: its argument is a path, so only the Dataset call shapes
+    // (no argument, or an `eager` flag) are matched.
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"not run from the repo root: ${root.getAbsolutePath}")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val par = new java.io.File(root, "graft/ops/Par.scala").getCanonicalFile
+    val sources = walk(root)
+    assert(sources.exists(_.getCanonicalFile == par))
+    val calls =
+      """\.localCheckpoint\b|\.checkpoint\(\s*(\)|eager|true|false)""".r
+    val offenders = for {
+      f <- sources if f.getCanonicalFile != par
+      (line, i) <- java.nio.file.Files.readString(f.toPath).linesIterator.zipWithIndex
+      if calls.findFirstIn(line).isDefined
+    } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty)
   }
 }

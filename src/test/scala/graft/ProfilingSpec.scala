@@ -237,4 +237,18 @@ class ProfilingSpec extends SparkSpec {
     assert(out(1995L) == (3000L, 1000L, 1000L * 1000000 / 3000))
     assert(out(1996L) == (2000L, 2000L, 1000000L))
   }
+
+  test("top orders rounds the exact revenue sum, not a double sum, to cents") {
+    import spark.implicits._
+    val customer = Seq((10L, "BUILDING")).toDF("c_custkey", "c_mktsegment")
+    val orders = Seq((100L, 10L, Timestamp.valueOf("1997-06-01 00:00:00")))
+      .toDF("o_orderkey", "o_custkey", "o_orderdate")
+    // 1.00·(1−0) + 2.19·(1−0.5) = 2.095 exactly, a half cent; the double
+    // sum is 2.0949999999999998 and would round down to 2.09.
+    val shipped = Timestamp.valueOf("1997-07-01 00:00:00")
+    val lineitem = Seq((100L, 1.00, 0.00, shipped), (100L, 2.19, 0.50, shipped))
+      .toDF("l_orderkey", "l_extendedprice", "l_discount", "l_shipdate")
+    val out = Tpch.topOrders(customer, orders, lineitem).collect()
+    assert(out.map(_.getAs[Double]("revenue")).toSeq == Seq(2.10))
+  }
 }
